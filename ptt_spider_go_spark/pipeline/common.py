@@ -7,7 +7,8 @@ DuckDB oracle SQL can compute bit-identical values:
     DuckDB:  ('0x' || substr(md5(x), 1, 15)) :: BIGINT
 
 15 hex chars = 60 bits < 63, so the value is always a positive BIGINT
-in both engines.
+in both engines. A narrower prefix (`width` hex chars) gives the same
+construction at 4·width bits, e.g. width=8 for a 32-bit hash.
 """
 
 from __future__ import annotations
@@ -23,10 +24,12 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.trim(text), WS), lambda t: t != "")
 
 
-def md5_long(c: Column, seed: int | None = None) -> Column:
-    """Deterministic 60-bit positive hash, oracle-reproducible."""
+def md5_long(c: Column, seed: int | str | None = None,
+             width: int = 15) -> Column:
+    """Deterministic positive hash of 4·width bits (60 by default) from
+    md5(seed:c), oracle-reproducible."""
     keyed = c if seed is None else F.concat(F.lit(f"{seed}:"), c)
-    return F.conv(F.substring(F.md5(keyed), 1, 15), 16, 10).cast("long")
+    return F.conv(F.substring(F.md5(keyed), 1, width), 16, 10).cast("long")
 
 
 def md5_long_sql(expr: str, seed: int | None = None) -> str:

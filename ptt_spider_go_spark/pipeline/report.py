@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ptt_spider_go_spark.pipeline.common import tokens
+from ptt_spider_go_spark.pipeline.common import md5_long, tokens
 
 #: quantile probe points, percent — integer rank targets
 #: r_p = (p * n + 99) DIV 100.
@@ -149,11 +149,7 @@ def corpus_digest(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
             F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
             for c in cols
         ])
-    h = (
-        F.conv(F.substring(F.md5(canon), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h")
-    )
+    h = md5_long(canon).alias("h")
     return df.select(h).agg(
         F.count("*").alias("n_rows"),
         F.expr(

@@ -11,7 +11,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ptt_spider_go_spark.pipeline.common import tokens
+from ptt_spider_go_spark.pipeline.common import md5_long, tokens
 
 # Tiny per-language stopword lists for the n-gram/stopword-ratio
 # heuristic. Deliberately minimal — the operator shape (portable,
@@ -842,8 +842,7 @@ def classifier_scores(docs: DataFrame) -> DataFrame:
     )
     feats = F.concat(toks, bigrams)
     w_int = lambda f: (  # noqa: E731 — md5-derived weight, oracle-twin
-        F.conv(F.substring(F.md5(F.concat(F.lit("w:"), f)), 1, 15), 16, 10)
-        .cast("long") % 2001 - 1000
+        md5_long(f, seed="w") % 2001 - 1000
     )
     score_int = F.aggregate(
         feats, F.lit(0).cast("long"), lambda acc, f: acc + w_int(f)
@@ -1053,20 +1052,12 @@ def quality_sample(docs: DataFrame) -> DataFrame:
     )
     feats = F.concat(toks, bigrams)
     w_int = lambda f: (  # noqa: E731 — same md5 weight as classifier
-        F.conv(F.substring(F.md5(F.concat(F.lit("w:"), f)), 1, 15), 16, 10)
-        .cast("long") % 2001 - 1000
+        md5_long(f, seed="w") % 2001 - 1000
     )
     si = F.aggregate(feats, F.lit(0).cast("long"),
                      lambda acc, f: acc + w_int(f))
     n = F.size(feats).cast("long")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("qs:"), F.col("doc_id").cast("string"))),
-                1, 15),
-            16, 10,
-        ).cast("long") % 10000
-    )
+    u = md5_long(F.col("doc_id").cast("string"), seed="qs") % 10000
     return docs.select(
         "doc_id",
         u.alias("u"),
@@ -1408,14 +1399,8 @@ def priority_sample_mass(docs: DataFrame, k: int = PRIORITY_SAMPLE_K,
         (
             (F.length("text").cast("double") * F.lit(_PS_HASH_SPACE))
             / (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(
-                            F.lit(f"{PRIORITY_SAMPLE_SEED}:"),
-                            F.col("doc_id").cast("string"))),
-                        1, 15),
-                    16, 10,
-                ).cast("long") + F.lit(1)
+                md5_long(F.col("doc_id").cast("string"),
+                         seed=PRIORITY_SAMPLE_SEED) + F.lit(1)
             ).cast("double")
         ).alias("q"),
     )

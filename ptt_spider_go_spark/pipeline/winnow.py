@@ -105,24 +105,30 @@ def _selections(hs: Column) -> Column:
     ).otherwise(F.array_distinct(sels))
 
 
+def winnow_selections(text: Column) -> Column:
+    """In-row robust-winnowing selection of `text`: the distinct
+    array<struct<fp, pos>> of selected (60-bit gram hash, 0-based gram
+    position); empty for texts shorter than K chars. One map-only
+    expression — `text` should be a plain column reference."""
+    n_hashes = F.greatest(F.char_length(text) - K + 1, F.lit(0))
+    hs_expr = F.when(
+        F.char_length(text) < K, F.array().cast("array<bigint>")
+    ).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(n_hashes, F.lit(1))),
+            lambda i: md5_long(F.substring(text, i.cast("int"), F.lit(K))),
+        )
+    )
+    return _let(hs_expr, _selections)
+
+
 def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, fp): the robust-winnowing fingerprint set —
     0-based gram position and 60-bit gram hash, one row per SELECTED
     (hash, pos), distinct per doc. Map-only until the final distinct;
     unordered (consumers sort if they need to)."""
-    n_hashes = F.greatest(F.char_length("text") - K + 1, F.lit(0))
-    hs_expr = F.when(
-        F.char_length("text") < K, F.array().cast("array<bigint>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n_hashes, F.lit(1))),
-            lambda i: md5_long(
-                F.substring(F.col("text"), i.cast("int"), F.lit(K))
-            ),
-        )
-    )
     sel = docs.select(
-        "doc_id", _let(hs_expr, _selections).alias("sels")
+        "doc_id", winnow_selections(F.col("text")).alias("sels")
     )
     return (
         sel.select("doc_id", F.explode("sels").alias("s"))

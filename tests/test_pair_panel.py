@@ -7,14 +7,20 @@ matches Spark cell-for-cell; identical docs max every measure
 (J = cont = winnow = 1.0, Hamming 0); a one-token edit separates
 the measures (J < 1.0 while containment of the shorter side stays
 high); pairs exist only where LSH bands collide (the panel never
-goes all-pairs); partitioning-invariant.
+goes all-pairs); token-less docs (empty, whitespace-only) drop out
+even when LSH pairs them; docs shorter than the winnow k-gram give
+winnow 0; partitioning-invariant.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from ptt_spider_go_spark.pipeline.dedup_text import pair_similarity_panel
+from ptt_spider_go_spark.pipeline.dedup_text import (
+    lsh_candidate_pairs,
+    minhash_signatures,
+    pair_similarity_panel,
+)
 from tests.test_winnow import _mirror_fps
 
 SCHEMA = "doc_id long, text string"
@@ -67,6 +73,8 @@ def _mirror(rows):
 
     out = []
     for a, b in sorted(pairs):
+        if not toks[a] or not toks[b]:
+            continue  # token-less docs have no panel row
         common = len(toks[a] & toks[b])
         za, zb = len(toks[a]), len(toks[b])
         ham = bin(simhash(a) ^ simhash(b)).count("1")
@@ -91,6 +99,17 @@ FIXTURE = [
     (2, BASE),                                   # identical
     (3, BASE.replace("hotel", "HOTEL")),         # one-token edit
     (4, "completely different words entirely unrelated content here"),
+    # edge cases: empty and whitespace-only docs share the "" shingle,
+    # so LSH pairs them, but neither has a token
+    (5, ""),
+    (6, "   \t\n   \t   "),
+    # identical docs shorter than the winnow k-gram: no fingerprints
+    (7, "ab cd"),
+    (8, "ab cd"),
+    # <= 3 tokens: one shingle of the whole text
+    (9, "one two three"),
+    (10, "one two three"),
+    (11, "uno dos"),
 ]
 
 
@@ -121,6 +140,20 @@ def test_edit_separates_measures(spark):
     assert pair["winnow_ppm"] < 1_000_000  # edited run breaks chunks
     # unrelated doc never pairs (bands cannot collide)
     assert not any(4 in k for k in got)
+
+
+def test_edge_cases(spark):
+    docs = _docs(spark, FIXTURE)
+    got = {(r["doc_a"], r["doc_b"]): tuple(r)[2:] for r in
+           pair_similarity_panel(docs).collect()}
+    lsh = {(r["doc_a"], r["doc_b"]) for r in
+           lsh_candidate_pairs(minhash_signatures(docs)).collect()}
+    assert (5, 6) in lsh and (5, 6) not in got
+    assert not any(5 in k or 6 in k for k in got)
+    assert got[(7, 8)] == (1_000_000, 1_000_000, 1_000_000, 0, 0, 0)
+    assert got[(9, 10)][:4] == (1_000_000, 1_000_000, 1_000_000, 0)
+    assert got[(9, 10)][5] == 1_000_000
+    assert not any(11 in k for k in got)
 
 
 def test_partitioning_invariance(spark):

@@ -344,6 +344,28 @@ def test_ngram_jaccard(spark, docs):
     assert (0, 4) not in pairs  # different lang bucket never joined
 
 
+def test_simhash32_matches_mirror(spark, docs):
+    """Value-level: each fingerprint equals the pure-Python SimHash-32
+    (bit i set iff more than half of the distinct tokens' md5[:8]
+    hashes have it); token-less docs have no row."""
+    from tests.test_pair_panel import _h32
+
+    rows = [(i, t) for i, t, _ in DOCS] + [(6, "  \t \n "), (7, "solo")]
+    frame = spark.createDataFrame(rows, "doc_id long, text string")
+    want = {}
+    for d, t in rows:
+        toks = set(t.split())
+        if toks:
+            want[d] = sum(
+                1 << i for i in range(32)
+                if 2 * sum(_h32(x) >> i & 1 for x in toks) > len(toks)
+            )
+    got = {r["doc_id"]: r["simhash"]
+           for r in dedup_text.simhash32(frame).collect()}
+    assert got == want
+    assert 5 not in got and 6 not in got
+
+
 def test_simhash_properties(spark, docs):
     sh = {r["doc_id"]: r["simhash"] for r in dedup_text.simhash32(docs).collect()}
     assert sh[0] == sh[2]
