@@ -228,8 +228,8 @@ def trap_suspects(frontier: DataFrame,
     faceted-search cross products, and session-id echo chambers
     (Heritrix's TooManyHopsDecideRule / PathologicalPathDecideRule
     family). A URL is flagged, never silently dropped: run_crawl's
-    trap_filter mode routes is_trap rows to the `trapped` result table
-    (quarantine-style accounting).
+    trap gate (trap_filter=True) routes is_trap rows to the `diverted`
+    result table with gate 'trap' (quarantine-style accounting).
 
     All four rules are pure column expressions over regex-extracted
     path/query parts (the SAME regexes the DuckDB oracle runs, so the

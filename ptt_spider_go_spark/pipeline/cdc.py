@@ -47,31 +47,19 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ptt_spider_go_spark.functions.columns import _let
 from ptt_spider_go_spark.pipeline.common import md5_long
+from ptt_spider_go_spark.pipeline.winnow import K, gram_hashes
 
-#: rolling window width (chars), shared construction with X134.
-CDC_W = 8
 #: boundary divisor: boundary after position i when h_i % D == 0.
 CDC_D = 64
 
 
 def _spans(text: Column) -> Column:
     """Array of (start, end) 1-based inclusive chunk spans for one
-    document — boundary positions from the bound window-hash array,
-    spans between consecutive boundaries. Short docs (< CDC_W chars)
-    are one whole-doc span; empty docs have none."""
+    document — boundary positions from the bound window-hash array
+    (winnow.gram_hashes; element j is the window ending at j + K),
+    spans between consecutive boundaries. Short docs (< K chars) are
+    one whole-doc span; empty docs have none."""
     n = F.char_length(text)
-    # hash at window END i (i = CDC_W .. n)
-    hs_expr = F.when(
-        n < CDC_W, F.array().cast("array<bigint>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(CDC_W), F.greatest(n, F.lit(CDC_W))),
-            lambda i: md5_long(
-                F.substring(text, (i - CDC_W + 1).cast("int"),
-                            F.lit(CDC_W))
-            ),
-        )
-    )
 
     def spans_of(hs: Column) -> Column:
         # boundary positions: i where h_i % D == 0
@@ -79,7 +67,7 @@ def _spans(text: Column) -> Column:
             F.transform(
                 hs,
                 lambda h, j: F.struct(
-                    (j + CDC_W).cast("long").alias("p"), h.alias("h")
+                    (j + K).cast("long").alias("p"), h.alias("h")
                 ),
             ),
             lambda x: x["h"] % CDC_D == 0,
@@ -100,7 +88,7 @@ def _spans(text: Column) -> Column:
 
     return F.when(n <= 0, F.array().cast(
         "array<struct<s:bigint,e:bigint>>"
-    )).otherwise(_let(hs_expr, spans_of))
+    )).otherwise(_let(gram_hashes(text), spans_of))
 
 
 def cdc_chunks(docs: DataFrame) -> DataFrame:

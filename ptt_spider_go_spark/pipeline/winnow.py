@@ -105,21 +105,27 @@ def _selections(hs: Column) -> Column:
     ).otherwise(F.array_distinct(sels))
 
 
+def gram_hashes(text: Column) -> Column:
+    """array<bigint> of md5_long over every K-char gram of `text`:
+    element s-1 hashes substring(text, s, K) for s = 1 .. n-K+1, so
+    element j is also the hash of the window ENDING at char j+K (the
+    CDC reading). Empty for texts shorter than K chars. Bind it with
+    `_let` before referencing it more than once."""
+    n = F.char_length(text)
+    return F.when(n < K, F.array().cast("array<bigint>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(n - K + 1, F.lit(1))),
+            lambda s: md5_long(F.substring(text, s.cast("int"), F.lit(K))),
+        )
+    )
+
+
 def winnow_selections(text: Column) -> Column:
     """In-row robust-winnowing selection of `text`: the distinct
     array<struct<fp, pos>> of selected (60-bit gram hash, 0-based gram
     position); empty for texts shorter than K chars. One map-only
     expression — `text` should be a plain column reference."""
-    n_hashes = F.greatest(F.char_length(text) - K + 1, F.lit(0))
-    hs_expr = F.when(
-        F.char_length(text) < K, F.array().cast("array<bigint>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n_hashes, F.lit(1))),
-            lambda i: md5_long(F.substring(text, i.cast("int"), F.lit(K))),
-        )
-    )
-    return _let(hs_expr, _selections)
+    return _let(gram_hashes(text), _selections)
 
 
 def winnow_fingerprints(docs: DataFrame) -> DataFrame:

@@ -4,6 +4,7 @@ A bounded BFS expressed as a batch superstep loop — not Structured
 Streaming — because the crawl is an iterative fixpoint over a priority
 frontier (BASELINE.json north_star). Each superstep:
 
+  0. opt-in frontier gates (trap, blocklist): flag-and-divert
   1. robots filter (broadcast anti-filter)           [north_rule]
   2. per-host politeness budget gate, salted lanes   (T1/T6)
   3. retry-ledger resolution of simulated statuses   (T2)
@@ -82,43 +83,76 @@ class CrawlResult:
     seen: DataFrame
     fetch_log: DataFrame
     metrics: DataFrame
+    diverted: DataFrame
     progress_events: DataFrame | None = None
     quarantine: DataFrame | None = None
-    trapped: DataFrame | None = None
-    blocked: DataFrame | None = None
     host_budget_log: DataFrame | None = None
-    archive_cdx: DataFrame | None = None
-    url_telemetry: DataFrame | None = None
     timings: dict = field(default_factory=dict)
     supersteps: int = 0
     wall_secs: float = 0.0
-    counters: dict = field(default_factory=dict)
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
-_TIMING = os.environ.get("PTT_CRAWL_TIMING", "") not in ("", "0")
-
-
 @contextmanager
-def _timed(label: str, timings: dict | None = None):
-    """Wall-clock a materialization block. Always records into
-    `timings` (two keys: the step-qualified label, and a cross-step
-    'phase.<name>' accumulator the scaling bench reads); prints only
-    under PTT_CRAWL_TIMING=1. The time.time() pair is nanoseconds of
-    overhead against multi-second Spark jobs."""
+def _timed(label: str, timings: dict):
+    """Wall-clock a materialization block into `timings` under two
+    keys: the step-qualified label, and a cross-step 'phase.<name>'
+    accumulator the scaling bench reads. The time.time() pair is
+    nanoseconds of overhead against multi-second Spark jobs."""
     t = time.time()
     yield
     dt = time.time() - t
-    if timings is not None:
-        timings[label] = round(timings.get(label, 0.0) + dt, 4)
-        phase = label.split(".", 1)[-1]
-        key = f"phase.{phase}"
-        timings[key] = round(timings.get(key, 0.0) + dt, 4)
-    if _TIMING:
-        print(f"[crawl-timing] {label}: {dt:.2f}s", flush=True)
+    timings[label] = round(timings.get(label, 0.0) + dt, 4)
+    phase = label.split(".", 1)[-1]
+    key = f"phase.{phase}"
+    timings[key] = round(timings.get(key, 0.0) + dt, 4)
+
+
+#: broadcast_frontier="auto" broadcasts the frontier side of the fetch
+#: join up to this many rows (see step 4+5 in run_crawl).
+BROADCAST_MAX_ROWS = 200_000
+
+
+def _flag_gate(flag_rows, flag: str, reason: str):
+    """Frontier gate from a flagging operator: `flag_rows(frontier)`
+    appends a boolean `flag` and a `reason` column; flagged rows are
+    diverted as (url, reason), the rest are kept as frontier rows."""
+    def gate(frontier: DataFrame) -> tuple[DataFrame, DataFrame]:
+        fl = flag_rows(frontier)
+        return (
+            fl.filter(~F.col(flag)).select(FRONTIER_COLS),
+            fl.filter(F.col(flag)).select("url", F.col(reason).alias("reason")),
+        )
+    return gate
+
+
+def _frontier_gates(trap_filter: bool, blocklist: DataFrame | None):
+    """(name, gate) pairs run in order on each superstep's frontier.
+    Flag-and-divert, never silently drop: every diverted row lands in
+    CrawlResult.diverted with its gate and reason.
+
+    - trap: crawler-trap heuristics (operators/politeness.py
+      with_trap_flags); reason = the first matching rule. A stateless
+      projection, zero extra shuffles.
+    - blocklist: registrable-domain suffix match per DISTINCT host
+      against the broadcast pattern list (operators/blocklist.py);
+      reason = the winning pattern.
+    """
+    gates = []
+    if trap_filter:
+        gates.append(("trap", _flag_gate(with_trap_flags, "is_trap", "trap_reason")))
+    if blocklist is not None:
+        gates.append(("blocklist", _flag_gate(
+            lambda f: blocklist_filter(
+                f.withColumn("_bhost", url_host(F.col("url"))),
+                blocklist, host_col="_bhost",
+            ),
+            "blocked", "matched_pattern",
+        )))
+    return gates
 
 
 _FRONTIER_SCHEMA = (
@@ -131,10 +165,17 @@ _ARTICLE_SCHEMA = (
     "board string, page_no int, src_url string, pos int, title string, "
     "url string, author string, push_rate int"
 )
+_CONTENTS_SCHEMA = (
+    "superstep int, url string, board string, page_no int, pos int, "
+    "title string, author string, push_rate int, parsed_title string, "
+    "final_title string, img_urls array<string>, "
+    "file_names array<string>, text_match boolean"
+)
 _LOG_SCHEMA = (
     "superstep int, url string, kind string, outcome string, attempt int, "
     "backoff_ms long, status int"
 )
+_DIVERTED_SCHEMA = "url string, gate string, reason string, superstep int"
 
 
 def run_crawl(
@@ -150,28 +191,43 @@ def run_crawl(
     resume: bool = False,
     verify_text: bool = True,
     broadcast_frontier: bool | str = "auto",
-    broadcast_max_rows: int = 200_000,
     probe_strategy: str = "html",
     trap_filter: bool = False,
     blocklist: DataFrame | None = None,
     seed_from_sitemaps: bool = False,
     aimd: bool = False,
-    robots_wildcards: bool = False,
-    archive_dir: str | None = None,
-    sketch_telemetry: bool = False,
 ) -> CrawlResult:
     """Run the crawl to fixpoint (or cfg.max_supersteps) and assemble
-    outputs. `checkpoint_dir` enables snapshot/resume; with
-    `resume=True` the loop continues from the last committed superstep.
+    outputs.
 
-    Two opt-in loop stages (default off, so the pinned reference-parity
-    outputs are untouched — the trap_filter pattern; VERDICT r04
-    next-round #4):
-
-    - `blocklist`: a (pattern) DataFrame of registrable-domain
-      blocklist entries (operators/blocklist.py) gates the frontier
-      each superstep; blocked rows divert to CrawlResult.blocked with
-      their winning pattern (flag-and-divert, like the trap gate).
+    - `boards` (board mode, default [cfg.board]) or `file_urls_path`
+      (file mode: one seed URL per line) choose the seed frontier.
+    - `fetch_events` (url, attempt, status) simulates HTTP statuses for
+      the retry ledger; without it every fetch is a 200.
+    - `robots`: the rule table. Its schema picks the matcher: a
+      `pattern` column (sources.robots.WILDCARD_RULES_SCHEMA) is read
+      as RFC 9309 wildcard patterns (apply_robots_wildcard), a
+      `path_prefix` column (RULES_SCHEMA) as plain prefixes
+      (apply_robots).
+    - `host_budgets` (host, budget) overrides the per-host politeness
+      budget cfg.host_budget_per_superstep.
+    - `checkpoint_dir` enables snapshot/resume; with `resume=True` the
+      loop continues from the last committed superstep.
+    - `verify_text` carries the pages' text through the parse kernel
+      and sets contents.text_match.
+    - `broadcast_frontier`: True/False pins the fetch-join strategy;
+      "auto" broadcasts frontiers of at most BROADCAST_MAX_ROWS rows.
+    - `probe_strategy`: "html" parses each board's landing page for its
+      max page number (reference parity); "urls" derives it from the
+      page urls alone and never reads html.
+    - `trap_filter` / `blocklist`: the frontier gates (_frontier_gates;
+      default off, so the pinned reference-parity outputs are
+      untouched). `blocklist` is a (pattern) DataFrame of
+      registrable-domain entries. Diverted rows land in
+      CrawlResult.diverted (url, gate, reason, superstep), which is
+      always a table and empty with no gate on; checkpointed runs with
+      a gate persist it per step as `diverted_delta`, so a resumed run
+      keeps the rows diverted before the kill.
     - `seed_from_sitemaps`: union the initial frontier with the
       robots->`Sitemap:`->sitemap-entries discovery chain
       (sources.seeds.sitemap_frontier) — board-mode only; reaches pages
@@ -188,9 +244,8 @@ def run_crawl(
       `host_budgets`/the default and re-adapts within one superstep
       (scheduling-only state — assembly is scheduling-independent, so
       outputs are unaffected).
-    - `sketch_telemetry`: emit CrawlResult.url_telemetry — per-superstep
-      and cumulative distinct-URL estimates from mergeable HLL sketches
-      (operators/sketches.py, X111); pure side output, default off.
+
+    Per-phase walls are recorded in CrawlResult.timings.
     """
     t0 = time.time()
     timings: dict = {}
@@ -226,20 +281,16 @@ def run_crawl(
     # ~cuckoo_min_seen fingerprints, so a fixed size would overflow at
     # the crossing); the 2^16 floor keeps forced-on test configs
     # (cuckoo_min_seen=0) from starting life overflowed.
-    cuckoos = (
-        CuckooShardSet.for_capacity(
-            cfg.bloom_shards, max(cfg.cuckoo_min_seen, 1 << 16),
-            state_dir=(os.path.join(filters_root, "cuckoo")
-                       if filters_root else None),
-        )
-        if cfg.cuckoo_verify else None
+    cuckoos = CuckooShardSet.for_capacity(
+        cfg.bloom_shards, max(cfg.cuckoo_min_seen, 1 << 16),
+        state_dir=os.path.join(filters_root, "cuckoo") if filters_root else None,
     )
     cuckoo_active = False
     n_seen_est = 0
 
     def _cuckoo_for_step(seen_df):
         nonlocal cuckoo_active
-        if cuckoos is None or n_seen_est < cfg.cuckoo_min_seen:
+        if n_seen_est < cfg.cuckoo_min_seen:
             return None
         if not cuckoo_active:
             cuckoos.add_df(seen_df)  # one-time bulk build at crossing
@@ -261,7 +312,7 @@ def run_crawl(
             if not blooms.has_state():
                 blooms.add_df(seen)
             n_seen_est = seen.count()
-        cuckoo_active = cuckoos is not None and cuckoos.has_state()
+        cuckoo_active = cuckoos.has_state()
     else:
         if file_mode:
             frontier = file_frontier(spark, file_urls_path)
@@ -301,9 +352,9 @@ def run_crawl(
 
     pages_fetch = pages.select("url", "warc_ts", "html", "text")
 
+    gates = _frontier_gates(trap_filter, blocklist)
+    wildcard_robots = robots is not None and "pattern" in robots.columns
     mem_steps: list[dict] = []
-    trapped_parts: list[DataFrame] = []
-    blocked_parts: list[DataFrame] = []
     budget_log_parts: list[DataFrame] = []
     cur_budgets = host_budgets
     step = start_step
@@ -318,52 +369,19 @@ def run_crawl(
             if frontier.isEmpty():
                 break
 
-        # 0. crawler-trap gate (opt-in, default off so the pinned
-        # reference-parity outputs are untouched): flag-and-divert,
-        # never silently drop — trapped rows land in the `trapped`
-        # result table with their rule, mirroring the quarantine
-        # pattern. Stateless projection, zero extra shuffles.
-        if trap_filter:
-            fl = with_trap_flags(frontier)
-            trapped_parts.append(
-                fl.filter(F.col("is_trap")).select(
-                    "url", F.col("trap_reason").alias("reason"),
-                    F.lit(step).alias("superstep"),
-                )
-            )
-            frontier = fl.filter(~F.col("is_trap")).select(FRONTIER_COLS)
+        # 0. frontier gates, in order (trap first): each keeps the clean
+        # rows and diverts the rest with its reason.
+        diverted_parts = []
+        for gate_name, gate in gates:
+            frontier, out = gate(frontier)
+            diverted_parts.append(out.select(
+                "url", F.lit(gate_name).alias("gate"), "reason",
+                F.lit(step).alias("superstep"),
+            ))
 
-        # 0b. domain-blocklist gate (opt-in, same flag-and-divert
-        # contract as the trap gate): registrable-domain suffix match
-        # per DISTINCT host against the broadcast pattern list
-        # (operators/blocklist.py); blocked rows land in the `blocked`
-        # result table with their winning pattern, never silently drop.
-        if blocklist is not None:
-            bl = blocklist_filter(
-                frontier.withColumn("_bhost", url_host(F.col("url"))),
-                blocklist, host_col="_bhost",
-            )
-            blocked_parts.append(
-                bl.filter(F.col("blocked")).select(
-                    "url", F.col("matched_pattern").alias("pattern"),
-                    F.lit(step).alias("superstep"),
-                )
-            )
-            frontier = bl.filter(~F.col("blocked")).select(FRONTIER_COLS)
-
-        # 1. robots + 2. politeness budget. `robots_wildcards` (opt-in,
-        # default off — the trap_filter pattern) reads the rule table's
-        # path column as RFC 9309 full wildcard patterns (X90) instead
-        # of plain prefixes; on metachar-free rules the two matchers
-        # are provably identical (parity-pinned), so flipping the flag
-        # never changes a prefix-rule crawl.
-        if robots_wildcards and robots is not None:
-            r = (
-                robots
-                if "pattern" in robots.columns
-                else robots.withColumnRenamed("path_prefix", "pattern")
-            )
-            allowed = apply_robots_wildcard(frontier, r)
+        # 1. robots + 2. politeness budget
+        if wildcard_robots:
+            allowed = apply_robots_wildcard(frontier, robots)
         else:
             allowed = apply_robots(frontier, robots)
         admitted, deferred = budget_gate(
@@ -396,7 +414,7 @@ def run_crawl(
         # count, the same class as the is_empty probe above.
         probe = ok.drop("warc_ts")
         if broadcast_frontier == "auto":
-            do_broadcast = frontier.count() <= broadcast_max_rows
+            do_broadcast = frontier.count() <= BROADCAST_MAX_ROWS
         else:
             do_broadcast = bool(broadcast_frontier)
         build = F.broadcast(probe) if do_broadcast else probe
@@ -415,32 +433,29 @@ def run_crawl(
             ).localCheckpoint(eager=True)
 
         # 5a. article rows from index pages (P1) + F1 push threshold
-        # (board-mode producer filter, crawler.go:414)
-        admitted_articles = (
-            parsed_all.filter(F.col("row_kind") == "art")
-            .filter(F.col("push_rate") >= F.lit(cfg.push_rate))
-            .select("board", "page_no", "src_url", "pos", "title", "url",
-                    "author", "push_rate")
+        # (board-mode producer filter, crawler.go:414); the same rows
+        # are the next superstep's candidates.
+        arts = parsed_all.filter(F.col("row_kind") == "art").filter(
+            F.col("push_rate") >= F.lit(cfg.push_rate)
         )
-
-        candidates = (
-            parsed_all.filter(F.col("row_kind") == "art")
-            .filter(F.col("push_rate") >= F.lit(cfg.push_rate))
-            .select(
-                "url",
-                F.lit("article").alias("kind"),
-                F.lit(1).alias("kind_rank"),
-                "board",
-                "page_no",
-                "pos",
-                F.lit(2).alias("depth"),
-                "warc_ts",
-                "title",
-                "author",
-                "push_rate",
-                F.lit(1).alias("attempt"),
-                F.lit(0).cast("long").alias("backoff_ms"),
-            )
+        admitted_articles = arts.select(
+            "board", "page_no", "src_url", "pos", "title", "url", "author",
+            "push_rate",
+        )
+        candidates = arts.select(
+            "url",
+            F.lit("article").alias("kind"),
+            F.lit(1).alias("kind_rank"),
+            "board",
+            "page_no",
+            "pos",
+            F.lit(2).alias("depth"),
+            "warc_ts",
+            "title",
+            "author",
+            "push_rate",
+            F.lit(1).alias("attempt"),
+            F.lit(0).cast("long").alias("backoff_ms"),
         )
 
         # 5b. article contents (P2 + D1 + D2 already applied in-kernel);
@@ -482,31 +497,22 @@ def run_crawl(
         # pages scan; 'missing' is a column-pruned url-only anti-join.
         # The final HTTP status rides along so the quarantine can name
         # the true cause (a 500 is not an exhausted 429 retry).
-        lit_step = F.lit(step)
-        log_rows = (
-            parsed_all.filter(F.col("row_kind") == "fetch").select(
-                lit_step.alias("superstep"), "url", "kind",
-                F.lit("fetched").alias("outcome"), "attempt", "backoff_ms",
-                F.lit(200).alias("status"),
+        def log_part(df, outcome, status=None):
+            return df.select(
+                F.lit(step).alias("superstep"), "url", "kind",
+                F.lit(outcome).alias("outcome"), "attempt", "backoff_ms",
+                F.col("status") if status is None
+                else F.lit(status).alias("status"),
             )
-            .unionByName(missing.select(
-                lit_step.alias("superstep"), "url", "kind",
-                F.lit("missing_404").alias("outcome"), "attempt", "backoff_ms",
-                F.lit(404).alias("status"),
-            ))
-        )
-        if retry is not None:
-            log_rows = log_rows.unionByName(retry.select(
-                lit_step.alias("superstep"), "url", "kind",
-                F.lit("retry_429").alias("outcome"), "attempt", "backoff_ms",
-                F.lit(429).alias("status"),
-            ))
-        if failed is not None:
-            log_rows = log_rows.unionByName(failed.select(
-                lit_step.alias("superstep"), "url", "kind",
-                F.lit("failed").alias("outcome"), "attempt", "backoff_ms",
-                "status",
-            ))
+
+        log_rows = functools.reduce(DataFrame.unionByName, [
+            log_part(df, outcome, status) for df, outcome, status in (
+                (parsed_all.filter(F.col("row_kind") == "fetch"), "fetched", 200),
+                (missing, "missing_404", 404),
+                (retry, "retry_429", 429),
+                (failed, "failed", None),
+            ) if df is not None
+        ])
 
         # AIMD control loop (opt-in): the budgets gating superstep k+1
         # are a pure function of this superstep's fetch statuses — one
@@ -552,15 +558,21 @@ def run_crawl(
         # deltas (append-only, like Iceberg appends); frontier/seen are
         # the loop-carried state and re-read from the committed snapshot,
         # which both truncates lineage and makes resume exact.
+        outputs = {
+            "articles": admitted_articles,
+            "contents": content,
+            "fetch_log": log_rows,
+        }
+        if gates:
+            outputs["diverted"] = functools.reduce(
+                DataFrame.unionByName, diverted_parts)
         if ckpt:
             ckpt.write_step(
                 step,
                 {
                     "frontier": next_frontier,
                     "seen": seen,
-                    "articles_delta": admitted_articles,
-                    "contents_delta": content,
-                    "fetch_log_delta": log_rows,
+                    **{f"{name}_delta": df for name, df in outputs.items()},
                 },
                 extra={"board": cfg.board, "file_mode": file_mode},
             )
@@ -572,45 +584,30 @@ def run_crawl(
             # O(steps x |seen|). Delta tables are history — kept.
             ckpt.expire_snapshots()
         else:
-            # Nothing to materialize here: seen is a union of
-            # checkpointed disjoint pieces, and next_frontier is a union
-            # of checkpointed fresh plus cheap windows over the already-
-            # checkpointed frontier — the top-of-loop checkpoint
-            # materializes it on the next iteration.
-            pass
-            # articles/contents/log are cheap filters over the already-
-            # materialized parsed_all — keep them lazy; the references
-            # hold the checkpointed RDD alive until final assembly.
-            mem_steps.append(
-                {
-                    "articles": admitted_articles,
-                    "contents": content,
-                    "log": log_rows,
-                }
-            )
+            # seen is a union of checkpointed disjoint pieces, and
+            # next_frontier is a union of checkpointed fresh plus cheap
+            # windows over the already-checkpointed frontier — the
+            # top-of-loop checkpoint materializes it on the next
+            # iteration. The outputs are cheap filters over the
+            # already-materialized parsed_all — keep them lazy; the
+            # references hold the checkpointed RDD alive until final
+            # assembly.
+            mem_steps.append(outputs)
 
         frontier = next_frontier
         step += 1
 
     # ---- final assembly (deterministic, scheduling-independent) ----------
-    if ckpt:
-        steps = list(range(0, (ckpt.last_committed_step() or 0) + 1))
-        articles = _union_steps(spark, ckpt, steps, "articles_delta", _ARTICLE_SCHEMA)
-        contents = _union_steps(spark, ckpt, steps, "contents_delta", None)
-        fetch_log = _union_steps(spark, ckpt, steps, "fetch_log_delta", _LOG_SCHEMA)
-    else:
-        articles = _union_mem(spark, [m["articles"] for m in mem_steps], _ARTICLE_SCHEMA)
-        contents = _union_mem(spark, [m["contents"] for m in mem_steps], None)
-        fetch_log = _union_mem(spark, [m["log"] for m in mem_steps], _LOG_SCHEMA)
+    def assemble(name, schema):
+        if ckpt:
+            steps = range((ckpt.last_committed_step() or 0) + 1)
+            return _union_steps(spark, ckpt, steps, f"{name}_delta", schema)
+        return _union_mem(spark, [m.get(name) for m in mem_steps], schema)
 
-    if contents is None:
-        contents = _empty(
-            spark,
-            "superstep int, url string, board string, page_no int, pos int, "
-            "title string, author string, push_rate int, parsed_title string, "
-            "final_title string, img_urls array<string>, "
-            "file_names array<string>, text_match boolean",
-        )
+    articles = assemble("articles", _ARTICLE_SCHEMA)
+    contents = assemble("contents", _CONTENTS_SCHEMA)
+    fetch_log = assemble("fetch_log", _LOG_SCHEMA)
+    diverted = assemble("diverted", _DIVERTED_SCHEMA)
 
     # D3: global dir-collision suffixing in canonical priority order.
     contents = with_unique_dir(contents)
@@ -649,40 +646,6 @@ def run_crawl(
     )
 
     # No global orderBy on the result tables: a total sort of the
-    # Opt-in archive stage (X95, default off): write the successfully
-    # fetched pages as WARC shards + their CDX index under archive_dir
-    # — the publish shape of a production crawl cycle. Pure side
-    # output: nothing downstream reads it, so pinned results are
-    # untouched (the trap_filter pattern).
-    archive_cdx = None
-    if archive_dir is not None:
-        from ptt_spider_go_spark.sinks.cdx import archive_captures
-
-        fetched = fetch_log.filter(F.col("status") == 200) \
-            .select("url").distinct()
-        caps = pages.join(fetched, "url", "left_semi").select(
-            "url", "warc_ts",
-            F.lit(200).alias("status"),
-            F.col("html").cast("string").alias("payload"),
-        )
-        archive_cdx = archive_captures(caps, archive_dir)
-
-    # Opt-in sketch telemetry (X111, default off): per-superstep HLL
-    # distinct-URL sketches + cumulative estimates from the sketch
-    # relation alone — the metrics artifact a 10^10-URL crawl keeps
-    # instead of exact cumulative distincts. Pure side output (the
-    # trap_filter pattern): nothing downstream reads it.
-    url_telemetry = None
-    if sketch_telemetry:
-        from ptt_spider_go_spark.operators.sketches import (
-            cumulative_sketches,
-            superstep_sketches,
-        )
-
-        url_telemetry = cumulative_sketches(
-            superstep_sketches(fetch_log.select("superstep", "url"))
-        )
-
     # articles table is a full range-partition shuffle that buys nothing
     # at scale (consumers sort-or-window what they need; the contract
     # pins an order-insensitive hash; tests order explicitly).
@@ -694,22 +657,9 @@ def run_crawl(
         seen=seen,
         fetch_log=fetch_log,
         metrics=metrics,
+        diverted=diverted,
         progress_events=events,
         quarantine=quarantine_from_fetch_log(fetch_log),
-        trapped=(
-            functools.reduce(DataFrame.unionByName, trapped_parts)
-            if trapped_parts
-            else _empty(spark, "url string, reason string, superstep int")
-        )
-        if trap_filter
-        else None,
-        blocked=(
-            functools.reduce(DataFrame.unionByName, blocked_parts)
-            if blocked_parts
-            else _empty(spark, "url string, pattern string, superstep int")
-        )
-        if blocklist is not None
-        else None,
         host_budget_log=(
             functools.reduce(DataFrame.unionByName, budget_log_parts)
             if budget_log_parts
@@ -717,8 +667,6 @@ def run_crawl(
         )
         if aimd
         else None,
-        archive_cdx=archive_cdx,
-        url_telemetry=url_telemetry,
         supersteps=step - start_step,
         wall_secs=time.time() - t0,
         timings=timings,
@@ -728,8 +676,6 @@ def run_crawl(
 def _union_steps(spark, ckpt, steps, name, schema):
     dfs = []
     for s in steps:
-        import os
-
         p = ckpt.table_path(s, name)
         if os.path.exists(p):
             dfs.append(spark.read.parquet(p))
@@ -739,7 +685,7 @@ def _union_steps(spark, ckpt, steps, name, schema):
 def _union_mem(spark, dfs, schema):
     dfs = [d for d in dfs if d is not None]
     if not dfs:
-        return _empty(spark, schema) if schema else None
+        return _empty(spark, schema)
     out = dfs[0]
     for d in dfs[1:]:
         # allowMissingColumns: checkpoint deltas written before a schema

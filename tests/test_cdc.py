@@ -16,10 +16,10 @@ import hashlib
 
 from ptt_spider_go_spark.pipeline.cdc import (
     CDC_D,
-    CDC_W,
     cdc_chunks,
     cdc_dedup_stats,
 )
+from ptt_spider_go_spark.pipeline.winnow import K
 
 SCHEMA = "doc_id long, text string"
 
@@ -37,9 +37,9 @@ def _mirror(text: str):
     if n == 0:
         return []
     bounds = [
-        i + CDC_W                       # 1-based window-end position
-        for i in range(n - CDC_W + 1)
-        if _h(text[i:i + CDC_W]) % CDC_D == 0
+        i + K                           # 1-based window-end position
+        for i in range(n - K + 1)
+        if _h(text[i:i + K]) % CDC_D == 0
     ]
     starts = [1] + [p + 1 for p in bounds]
     ends = bounds + [n]

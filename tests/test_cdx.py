@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ptt_spider_go_spark.functions.surt import surt_key
 from ptt_spider_go_spark.sinks.cdx import (
+    archive_captures,
     cdx_from_positions,
     cdx_lines,
     cdx_records,
@@ -239,11 +240,10 @@ def test_revisit_savings_rollup(spark):
 
 
 def test_archive_crawl_e2e(spark, tmp_path):
-    """X95: run_crawl(archive_dir=...) publishes WARC shards + a CDX
-    parquet of every 200-fetched page; index rows cover exactly the
-    distinct fetched URLs, each offset slices the shard bytes to a
-    standalone record for that URL, and article outputs are identical
-    to the archive-off run (pure side output)."""
+    """X95: a crawl's 200-fetched pages published with archive_captures
+    as WARC shards + a CDX parquet; index rows cover exactly the
+    distinct fetched URLs, and each offset slices the shard bytes to a
+    standalone record for that URL."""
     from ptt_spider_go_spark.config import CrawlConfig
     from ptt_spider_go_spark.datagen import pages_pandas
     from ptt_spider_go_spark.plans.crawl import run_crawl
@@ -254,16 +254,17 @@ def test_archive_crawl_e2e(spark, tmp_path):
     cfg = CrawlConfig(board="Beauty", pages=2, push_rate=0,
                       host_salt=2, max_supersteps=4)
     adir = str(tmp_path / "archive")
-    res = run_crawl(spark, pages, cfg, archive_dir=adir)
-    res_off = run_crawl(spark, pages, cfg)
-    assert res_off.archive_cdx is None
+    res = run_crawl(spark, pages, cfg)
+    ok = res.fetch_log.filter(F.col("status") == 200).select("url").distinct()
+    caps = pages.join(ok, "url", "left_semi").select(
+        "url", "warc_ts",
+        F.lit(200).alias("status"),
+        F.col("html").cast("string").alias("payload"),
+    )
+    archive_cdx = archive_captures(caps, adir)
 
-    fetched = {
-        r["url"]
-        for r in res.fetch_log.filter(F.col("status") == 200)
-        .select("url").distinct().collect()
-    }
-    cdx_rows = res.archive_cdx.collect()
+    fetched = {r["url"] for r in ok.collect()}
+    cdx_rows = archive_cdx.collect()
     assert {r["url"] for r in cdx_rows} == fetched
     assert len(cdx_rows) == len(fetched)
     # offsets slice the written shards to standalone records
@@ -277,6 +278,3 @@ def test_archive_crawl_e2e(spark, tmp_path):
         assert rec[1] == r["url"]
     # surt keys site-major and well-formed
     assert all(r["surt"].startswith("cc,ptt)/") for r in cdx_rows)
-    # pure side output: article set identical with the stage off
-    assert sorted(map(tuple, res.articles.collect())) == \
-        sorted(map(tuple, res_off.articles.collect()))

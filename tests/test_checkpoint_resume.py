@@ -59,6 +59,34 @@ def test_kill_and_resume_identical(spark, pages, tmp_path):
     assert _snapshot(full) == _snapshot(resumed)
 
 
+def test_kill_and_resume_keeps_diverted_rows(spark, pages, tmp_path):
+    """Rows a frontier gate diverts before the kill survive the resume:
+    a file-mode crawl whose seed file holds a trap URL, stopped after
+    superstep 0 and resumed, reports the same `diverted` rows as an
+    uninterrupted checkpointed run."""
+    arts = sorted(r["url"] for r in pages.filter(F.col("url").contains("/M."))
+                  .select("url").collect())[:3]
+    trap = "https://www.ptt.cc/bbs" + "/cal/2024" * 4 + "/M.1.A.html"
+    seeds = tmp_path / "urls.txt"
+    seeds.write_text("\n".join(arts + [trap]))
+    kw = dict(file_urls_path=str(seeds), trap_filter=True, verify_text=False)
+
+    full = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(tmp_path / "full"),
+                     **kw)
+    part_dir = str(tmp_path / "part")
+    run_crawl(spark, pages, _cfg(max_supersteps=1), checkpoint_dir=part_dir,
+              **kw)
+    resumed = run_crawl(spark, pages, _cfg(), checkpoint_dir=part_dir,
+                        resume=True, **kw)
+
+    def diverted(res):
+        return sorted(map(tuple, res.diverted.collect()))
+
+    assert diverted(full) == [(trap, "trap", "repeated_segments", 0)]
+    assert diverted(resumed) == diverted(full)
+    assert _snapshot(resumed) == _snapshot(full)
+
+
 def test_resume_noop_when_finished(spark, pages, tmp_path):
     d = tmp_path / "done"
     first = run_crawl(spark, pages, _cfg(), checkpoint_dir=str(d),

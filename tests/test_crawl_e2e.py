@@ -284,9 +284,9 @@ def test_sitemap_seeding_reaches_unlinked_pages(spark, dataset):
 
 def test_trap_filter_diverts_without_dropping_silently(spark, dataset, tmp_path):
     """Opt-in crawler-trap gate: a calendar-loop URL in the seed file is
-    diverted to the `trapped` table with its rule, never fetched; the
-    clean URLs crawl exactly as without the gate; default-off leaves
-    `trapped` as None (pinned outputs untouched)."""
+    diverted with gate 'trap' and its rule, never fetched; the clean
+    URLs crawl exactly as without the gate; default-off diverts nothing
+    (pinned outputs untouched)."""
     golden_all = golden_crawl(dataset, BOARD, PAGES, 0)
     urls = [c["url"] for c in golden_all["contents"]][:4]
     trap = "https://www.ptt.cc/bbs" + "/cal/2024" * 4 + "/M.1.A.html"
@@ -296,34 +296,35 @@ def test_trap_filter_diverts_without_dropping_silently(spark, dataset, tmp_path)
     cfg = CrawlConfig(board=BOARD, pages=1, push_rate=0, max_supersteps=4)
     res = run_crawl(spark, spark.createDataFrame(dataset), cfg,
                     file_urls_path=str(f), trap_filter=True)
-    trapped = {(r["url"], r["reason"]) for r in res.trapped.collect()}
-    assert trapped == {(trap, "repeated_segments")}
+    diverted = {(r["url"], r["gate"], r["reason"], r["superstep"])
+                for r in res.diverted.collect()}
+    assert diverted == {(trap, "trap", "repeated_segments", 0)}
     fetched = {r["url"] for r in res.fetch_log.collect()}
     assert trap not in fetched
     assert set(urls) <= fetched
 
     res_off = run_crawl(spark, spark.createDataFrame(dataset), cfg,
                         file_urls_path=str(f))
-    assert res_off.trapped is None
+    assert res_off.diverted.filter(F.col("gate") == "trap").count() == 0
     # without the gate the trap URL IS attempted (missing page -> 404)
     assert trap in {r["url"] for r in res_off.fetch_log.collect()}
 
 
 def test_blocklist_gate_inert_list_is_output_parity(spark, dataset):
     """Opt-in domain-blocklist gate with patterns matching no crawled
-    host: the `blocked` table exists and is empty, and articles equal
-    the gate-off run exactly (the gate annotates, never perturbs);
-    default-off leaves `blocked` None. A bare-TLD 'cc' pattern must
-    NOT block www.ptt.cc (registrable-domain semantics)."""
+    host: nothing is diverted, and articles equal the gate-off run
+    exactly (the gate annotates, never perturbs); default-off diverts
+    nothing. A bare-TLD 'cc' pattern must NOT block www.ptt.cc
+    (registrable-domain semantics)."""
     bl = spark.createDataFrame([("ads.example",), ("cc",)],
                                "pattern string")
     cfg = CrawlConfig(board=BOARD, pages=PAGES, push_rate=PUSH,
                       host_salt=4, max_supersteps=6)
     res = run_crawl(spark, spark.createDataFrame(dataset), cfg,
                     blocklist=bl)
-    assert res.blocked.count() == 0
+    assert res.diverted.count() == 0
     res_off = run_crawl(spark, spark.createDataFrame(dataset), cfg)
-    assert res_off.blocked is None
+    assert res_off.diverted.filter(F.col("gate") == "blocklist").count() == 0
     def key(r):
         return (r["board"], r["page_no"], r["pos"])
 
@@ -333,7 +334,7 @@ def test_blocklist_gate_inert_list_is_output_parity(spark, dataset):
 
 def test_blocklist_gate_blocking_crawl_host_empties_crawl(spark, dataset):
     """Blocking ptt.cc itself starves the whole board crawl: nothing
-    fetched, every frontier row accounted for in `blocked`."""
+    fetched, every frontier row accounted for in `diverted`."""
     bl = spark.createDataFrame([("ptt.cc",)], "pattern string")
     cfg = CrawlConfig(board=BOARD, pages=PAGES, push_rate=PUSH,
                       max_supersteps=4)
@@ -341,6 +342,65 @@ def test_blocklist_gate_blocking_crawl_host_empties_crawl(spark, dataset):
                     blocklist=bl)
     assert res.fetch_log.count() == 0
     assert res.articles.count() == 0
-    rows = res.blocked.collect()
+    rows = res.diverted.collect()
     assert len(rows) > 0
-    assert {r["pattern"] for r in rows} == {"ptt.cc"}
+    assert {(r["gate"], r["reason"]) for r in rows} == {("blocklist", "ptt.cc")}
+
+
+def _with_index_links(dataset, index_url, hrefs):
+    """Copy of `dataset` whose `index_url` page lists extra articles at
+    `hrefs` (each becomes https://www.ptt.cc + href, as the parser
+    joins them; an '@host/...' href therefore lands on `host`)."""
+    rents = "".join(
+        '<div class="r-ent"><div class="nrec"><span class="hl f2">99</span>'
+        f'</div><div class="title"><a href="{h}">[心得] off-list {i}</a>'
+        '</div><div class="meta"><div class="author">userX</div>'
+        '<div class="date">1/01</div></div></div>'
+        for i, h in enumerate(hrefs)
+    )
+    out = dataset.copy()
+    i = out.index[out["url"] == index_url][0]
+    out.at[i, "html"] = out.at[i, "html"].replace(
+        b"</body>", rents.encode() + b"</body>")
+    return out
+
+
+def test_trap_and_blocklist_gates_together(spark, dataset):
+    """Both frontier gates in one crawl: a URL matching both is
+    diverted once, by the trap gate that runs first; each gate's rows
+    carry their own reason; every other URL crawls exactly as with no
+    gate (the diverted URLs, never fetched, are the only fetch-log
+    difference — ungated they are attempted and miss)."""
+    cal = "/cal/2024" * 4
+    both = f"https://www.ptt.cc@ads.example{cal}/M.9.A.html"
+    blocked = "https://www.ptt.cc@ads.example/bbs/Beauty/M.8.A.html"
+    trapped = f"https://www.ptt.cc/bbs/Beauty{cal}/M.7.A.html"
+    pages = spark.createDataFrame(_with_index_links(
+        dataset, f"https://www.ptt.cc/bbs/{BOARD}/index2346.html",
+        [u[len("https://www.ptt.cc"):] for u in (both, blocked, trapped)],
+    ))
+    bl = spark.createDataFrame([("ads.example",)], "pattern string")
+    cfg = CrawlConfig(board=BOARD, pages=PAGES, push_rate=PUSH,
+                      host_salt=4, max_supersteps=6)
+    res = run_crawl(spark, pages, cfg, trap_filter=True, blocklist=bl)
+    off = run_crawl(spark, pages, cfg)
+
+    got = sorted((r["url"], r["gate"], r["reason"])
+                 for r in res.diverted.collect())
+    assert got == sorted([
+        (both, "trap", "repeated_segments"),
+        (blocked, "blocklist", "ads.example"),
+        (trapped, "trap", "repeated_segments"),
+    ])
+
+    def rows(df, cols=None):
+        return sorted(map(tuple, (df.select(*cols) if cols else df).collect()))
+
+    for name in ("articles", "contents", "download_tasks", "markdown_docs"):
+        assert rows(getattr(res, name)) == rows(getattr(off, name)), name
+    log_cols = ["superstep", "url", "outcome", "status"]
+    gone = {u for u, _, _ in got}
+    assert rows(res.fetch_log, log_cols) == [
+        r for r in rows(off.fetch_log, log_cols) if r[1] not in gone
+    ]
+    assert gone <= {r[1] for r in rows(off.fetch_log, log_cols)}

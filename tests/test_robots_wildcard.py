@@ -232,9 +232,8 @@ def test_rules_parse_through_arrow_kernel(spark):
 def test_prefix_rules_identical_to_prefix_matcher(spark):
     """On metachar-free rules the wildcard matcher is a strict
     generalization of apply_robots: same prefixes, same length
-    precedence, same tie-break — outputs must be row-identical, which
-    is what makes run_crawl's robots_wildcards flag safe to flip on a
-    prefix-rule table."""
+    precedence, same tie-break — outputs must be row-identical, so a
+    prefix-rule table read as wildcard patterns crawls the same."""
     from ptt_spider_go_spark.operators.politeness import apply_robots
 
     prefix_rules = spark.createDataFrame(
@@ -264,10 +263,10 @@ def test_prefix_rules_identical_to_prefix_matcher(spark):
 
 
 def test_run_crawl_wildcard_flag_prefix_parity(spark):
-    """run_crawl(robots_wildcards=True) over a prefix-only rule table
-    produces the exact article set of the default matcher (flag is
-    opt-in and inert on prefix rules), and a `$`-anchored rule only
-    bites with the flag on."""
+    """run_crawl picks the robots matcher from the rule table's schema.
+    Prefix-only rules in the wildcard schema (`pattern`) produce the
+    exact article set of the prefix schema (`path_prefix`), and a
+    `$`-anchored wildcard rule bites only under the wildcard schema."""
     from ptt_spider_go_spark.config import CrawlConfig
     from ptt_spider_go_spark.datagen import pages_pandas
     from ptt_spider_go_spark.plans.crawl import run_crawl
@@ -287,10 +286,21 @@ def test_run_crawl_wildcard_flag_prefix_parity(spark):
         return (r["board"], r["page_no"], r["pos"])
 
     base = run_crawl(spark, pages, cfg, robots=rules)
-    wc = run_crawl(spark, pages, cfg, robots=rules, robots_wildcards=True)
+    wc = run_crawl(spark, pages, cfg,
+                   robots=rules.withColumnRenamed("path_prefix", "pattern"))
     assert [tuple(r) for r in sorted(wc.articles.collect(), key=key)] == \
         [tuple(r) for r in sorted(base.articles.collect(), key=key)]
     assert len([tuple(r) for r in base.articles.collect()]) > 0
+    assert base.contents.count() > 0
+
+    anchored = [("www.ptt.cc", "/bbs/*/M.*.html$", False)]
+    as_prefix = run_crawl(spark, pages, cfg, robots=spark.createDataFrame(
+        anchored, "host string, path_prefix string, allowed boolean"))
+    as_pattern = run_crawl(spark, pages, cfg, robots=spark.createDataFrame(
+        anchored, WILDCARD_RULES_SCHEMA))
+    assert as_prefix.contents.count() == base.contents.count()
+    assert as_pattern.contents.count() == 0
+    assert as_pattern.articles.count() == base.articles.count()
 
 
 def test_robots_failure_policy_rfc9309(spark):

@@ -116,12 +116,10 @@ def test_estimates_track_exact_within_tolerance(spark):
 
 
 def test_run_crawl_sketch_telemetry_side_output(spark):
-    """The loop-stage composition: run_crawl(sketch_telemetry=True)
-    emits one telemetry row per superstep that fetched, and the final
-    cumulative estimate equals the fetch log's exact distinct-URL
-    count (HLL is exact at this cardinality — sparse mode); default
-    off -> None, and pinned outputs are untouched (pure side
-    output)."""
+    """Sketch telemetry over a crawl's fetch log: one telemetry row per
+    superstep that fetched, and the final cumulative estimate equals
+    the fetch log's exact distinct-URL count (HLL is exact at this
+    cardinality — sparse mode)."""
     from ptt_spider_go_spark.config import CrawlConfig
     from ptt_spider_go_spark.datagen import pages_pandas
     from ptt_spider_go_spark.plans.crawl import run_crawl
@@ -131,17 +129,15 @@ def test_run_crawl_sketch_telemetry_side_output(spark):
                      slots_per_page=4))
     cfg = CrawlConfig(board="Test", pages=2, push_rate=0,
                       host_salt=2, max_supersteps=4)
-    res = run_crawl(spark, pages, cfg, sketch_telemetry=True)
-    assert res.url_telemetry is not None
-    tel = {r["superstep"]: r for r in res.url_telemetry.collect()}
+    res = run_crawl(spark, pages, cfg)
+    url_telemetry = cumulative_sketches(
+        superstep_sketches(res.fetch_log.select("superstep", "url")))
+    tel = {r["superstep"]: r for r in url_telemetry.collect()}
     steps = [r["superstep"]
              for r in res.fetch_log.select("superstep").distinct().collect()]
     assert sorted(tel) == sorted(steps)
     exact = res.fetch_log.select("url").distinct().count()
     assert round(tel[max(tel)]["est_cum"]) == exact
-
-    off = run_crawl(spark, pages, cfg)
-    assert off.url_telemetry is None
 
 
 def _exact_q(values, p_ppm):
